@@ -144,3 +144,76 @@ def test_input_index_not_mutated(zones, idx_all):
                            np.array([10, 11, 11, 10], np.float32)))
     for f, v in before.items():
         assert np.array_equal(getattr(idx_all, f), v), f
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.select("image_id", "zone_id", "via_knn").collect())
+
+
+def test_facade_assign_after_edits_matches_fresh_lookup(spark, zones, monkeypatch, tmp_path):
+    """TimezoneLookup reuses its broadcast cover, zone dim and cover tables
+    across calls in one application; a zone edit must drop them. After
+    replace_zone and after delete_zone, assign and assign_join answer like
+    a TimezoneLookup freshly built over the edited zone list, the replaced
+    broadcast is unpersisted, and calls between edits share one broadcast."""
+    from pyspark import SparkContext
+    from pyspark.core.broadcast import Broadcast
+
+    from tzspark.api import TimezoneLookup
+    from tzspark.datasets import images_df
+
+    made, unpersisted = [], []
+    real_broadcast, real_unpersist = SparkContext.broadcast, Broadcast.unpersist
+
+    def broadcast(self, value):
+        made.append(real_broadcast(self, value))
+        return made[-1]
+
+    def unpersist(self, blocking=False):
+        unpersisted.append(self)
+        real_unpersist(self, blocking)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "unpersist", unpersist)
+
+    imgs = images_df(spark, 2000, partitions=4)
+    tl = TimezoneLookup(zones)
+    before = _rows(tl.assign(spark, imgs))
+    assert _rows(tl.assign(spark, imgs)) == before
+    # results of two calls share the memoized UDF and dim, and still combine
+    both = tl.assign(spark, imgs).unionByName(tl.assign(spark, imgs))
+    assert _rows(both) == sorted(before * 2)
+    assert _rows(tl.assign_join(spark, imgs)) == before
+    assert _rows(tl.assign_join(spark, imgs, cache_dir=str(tmp_path))) == before
+    assert len(made) == 1  # two assigns, one broadcast; assign_join adds none
+
+    # the two zones that resolve the most rows without kNN: editing them
+    # must change answers, so a stale cover cannot pass unnoticed
+    hits = {}
+    for _, zid, via in before:
+        if not via:
+            hits[zid] = hits.get(zid, 0) + 1
+    busiest = sorted(hits, key=hits.get)[-2:]
+    z = next(z for z in tl.zones if z.zone_id == busiest[0])
+    # a homothety keeps the ring simple; half size about its first vertex
+    shrunk = Zone(z.zone_id, z.tzid,
+                  z.ring_lat[0] + (z.ring_lat - z.ring_lat[0]) * np.float32(0.5),
+                  z.ring_lng[0] + (z.ring_lng - z.ring_lng[0]) * np.float32(0.5))
+
+    last = before
+    for edit in (lambda: tl.replace_zone(shrunk), lambda: tl.delete_zone(busiest[1])):
+        old = made[-1]
+        edit()
+        assert unpersisted[-1] is old
+        want = _rows(TimezoneLookup(list(tl.zones)).assign(spark, imgs))
+        assert want != last
+        n = len(made)
+        assert _rows(tl.assign(spark, imgs)) == want
+        assert _rows(tl.assign(spark, imgs)) == want
+        assert _rows(tl.assign_join(spark, imgs)) == want
+        # parquet cover tables are keyed by zone content: a stale key loads
+        # the pre-edit tables
+        assert _rows(tl.assign_join(spark, imgs, cache_dir=str(tmp_path))) == want
+        assert len(made) == n + 1
+        assert made[-1]._jbroadcast.id() != old._jbroadcast.id()
+        last = want

@@ -355,21 +355,34 @@ def assign_timezones(
     kNN run fused inside lookup_udf — the multi-KB payload column never
     enters Python on this path (measured ~6x crossing cost when it does).
     """
-    looked = images.withColumn(
-        "a", lookup_udf(idx_bcast)(gps_header_col(F.col("bytes")))
-    )
-    pts = looked.select(
-        "*",
-        F.col("a.lat").alias("lat"),
-        F.col("a.lng").alias("lng"),
-        (~F.col("a.gps_ok")).alias("quarantined"),
-        F.col("a.zone_id").alias("zone_id"),
-        F.col("a.via_knn").alias("via_knn"),
-    ).drop("a")
-    assigned = pts.where(~F.col("quarantined")).withColumn(
-        "cell_id", cell_id_col(F.col("lat"), F.col("lng"), max_res)
-    )
-    return assigned.join(F.broadcast(zone_dim.select("zone_id", "tzid")), "zone_id", "left")
+    return lookup_plan(idx_bcast, zone_dim, max_res)(images)
+
+
+def lookup_plan(idx_bcast, zone_dim: DataFrame, max_res: int = DEFAULT_MAX_RES):
+    """assign_timezones as a reusable function images -> DataFrame. The
+    driver-side pieces that do not depend on the images are built once
+    here: the lookup UDF (whose command is pickled on first use), the
+    cell-id expression (~100 py4j calls) and the dim projection. Each call
+    still makes a fresh UDF expression, so two results may meet in one
+    plan."""
+    lookup = lookup_udf(idx_bcast)
+    cell_id = cell_id_col(F.col("lat"), F.col("lng"), max_res)
+    dim = F.broadcast(zone_dim.select("zone_id", "tzid"))
+
+    def plan(images: DataFrame) -> DataFrame:
+        looked = images.withColumn("a", lookup(gps_header_col(F.col("bytes"))))
+        pts = looked.select(
+            "*",
+            F.col("a.lat").alias("lat"),
+            F.col("a.lng").alias("lng"),
+            (~F.col("a.gps_ok")).alias("quarantined"),
+            F.col("a.zone_id").alias("zone_id"),
+            F.col("a.via_knn").alias("via_knn"),
+        ).drop("a")
+        assigned = pts.where(~F.col("quarantined")).withColumn("cell_id", cell_id)
+        return assigned.join(dim, "zone_id", "left")
+
+    return plan
 
 
 def quarantined_rows(images: DataFrame) -> DataFrame:
